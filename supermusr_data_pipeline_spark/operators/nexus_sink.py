@@ -188,13 +188,15 @@ def retire_completed_runs(
     the run left the live sink, so no appender can race the rewrite.
 
     ``writer``: the LIVE sink writer (NexusStreamWriter or
-    DirectNexusWriter), if one is still appending.  Retired runs are
-    dropped from its runs dimension via ``refresh_runs`` so a straggler
-    frame matching a retired run's interval can no longer RESURRECT the
-    run's live directory after its data moved to ``completed/`` — the
-    reference drops the run from its cache on move_to_completed and
-    rejects messages for it thereafter (run_engine/run/mod.rs:116-139,
-    frame/cache.rs:55-63).
+    FetchLoopNexusWriter), if one is still appending.  Retirable runs are
+    dropped from its runs dimension via ``refresh_runs`` BEFORE their
+    directories move, so a straggler frame matching a retired run's
+    interval can no longer RESURRECT the run's live directory after its
+    data moved to ``completed/`` — the reference drops the run from its
+    cache on move_to_completed and rejects messages for it thereafter
+    (run_engine/run/mod.rs:116-139, frame/cache.rs:55-63).  The fetch
+    loop's ``refresh_runs`` takes the loop lock, which every cycle holds
+    from match to publish, so once it returns no cycle can write the run.
     """
     retirable = [
         r["run_name"]
@@ -208,6 +210,8 @@ def retire_completed_runs(
         .select("run_name")
         .collect()
     ]
+    if writer is not None and retirable:
+        writer.refresh_runs(runs.filter(~F.col("run_name").isin(retirable)))
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
     conf = spark._jsc.hadoopConfiguration()
@@ -230,8 +234,6 @@ def retire_completed_runs(
                 spark, _os.path.join(sink_path, completed_subdir),
                 f"run_name={name}",
             )
-    if writer is not None and moved:
-        writer.refresh_runs(runs.filter(~F.col("run_name").isin(moved)))
     return moved
 
 

@@ -6,9 +6,10 @@ package lifts the stateful pieces onto Structured Streaming:
 - frame assembly with completeness + processing-time TTL (T1-T3) →
   ``frame_assembly_stream.assemble_frames_stream`` (applyInPandasWithState)
 - run lifecycle FSM (T4) → ``run_lifecycle`` (batch fold + streaming state)
-- NeXus run sink (S6/S7) → ``nexus_stream.write_nexus_stream`` (foreachBatch)
-- fused assembly+sink, the PRODUCTION door since round 9 (A1-A3 + S6 in one
-  foreachBatch, no stateful operator) → ``nexus_direct.write_nexus_direct``
+- NeXus run sink (S6/S7) → ``nexus_stream.write_nexus_stream`` (foreachBatch),
+  the Spark-native door for any streaming source
+- fused assembly+sink, the PRODUCTION door (A1-A3 + S6 in an in-process Kafka
+  fetch loop, no micro-batch) → ``nexus_fetchloop.FetchLoopNexusWriter``
 - DAQ observability stats (A7/A8) → ``daq_stats``
 - crash recovery (T5) → Structured Streaming checkpointing (free) plus the
   sink-side resume scan in nexus_stream.
@@ -27,8 +28,6 @@ from .frame_assembly_stream import (  # noqa: F401
     assemble_frames_stream,
     events_long_to_messages,
 )
-from .frame_assembly_tws import assemble_frames_stream_tws  # noqa: F401
-from .nexus_direct import DirectNexusWriter, write_nexus_direct  # noqa: F401
 from .nexus_stream import write_nexus_stream  # noqa: F401
 from .postings_ingest import (  # noqa: F401
     bm25_topk_over_index,

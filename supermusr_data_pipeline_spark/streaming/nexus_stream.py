@@ -117,28 +117,6 @@ def _events_with_dim(
     arrays are always equal-length (one event per element, the aev2
     contract), so positional indexing is exact; posexplode_outer keeps
     the zero-event frame as one null row, as explode_outer did."""
-    return _events_us_with_dim(
-        frames_batch.select(
-            F.unix_micros("ts").alias("ts_us"),
-            *_FRAME_KEY[1:],
-            "channel", "event_time", "event_voltage",
-        ),
-        dim,
-        with_run_col=with_run_col,
-    )
-
-
-def _events_us_with_dim(
-    rows_us: DataFrame, dim: DataFrame, with_run_col: bool = True,
-    outer: bool = True,
-) -> DataFrame:
-    """The ts_us-shaped core of ``_events_with_dim``: ``rows_us`` carries
-    integer-microsecond ``ts_us`` plus the rest of the frame key and the
-    three parallel event arrays (frame-level OR message-level rows — the
-    join decorates either the same way).  ``outer=False`` uses plain
-    posexplode, for message-level callers that handle zero-event frames
-    via a dimension-side branch instead (streaming/nexus_direct.py)."""
-    explode = F.posexplode_outer if outer else F.posexplode
     dim_cols = [
         "frame_seq",
         "event_time_zero",
@@ -152,15 +130,17 @@ def _events_us_with_dim(
     if with_run_col:
         dim_cols.insert(0, F.col("run_name"))
     joined = (
-        rows_us.select(
-            *_JOIN_KEY, "channel", "event_time", "event_voltage",
+        frames_batch.select(
+            F.unix_micros("ts").alias("ts_us"),
+            *_FRAME_KEY[1:],
+            "channel", "event_time", "event_voltage",
         )
         .join(F.broadcast(dim), _JOIN_KEY)
         .select(
             *dim_cols,
             "event_time",
             "event_voltage",
-            explode("channel"),
+            F.posexplode_outer("channel"),
         )
     )
     passthrough = (["run_name"] if with_run_col else []) + [
@@ -185,8 +165,6 @@ def _events_us_with_dim(
     )
 
 
-
-
 class NexusStreamWriter:
     """The foreachBatch callable.  Holds per-run continuation totals
     {run_name: (next_frame_seq, next_event_index)}; rebuilds them from the
@@ -198,22 +176,11 @@ class NexusStreamWriter:
     commit-log write) makes the sink append exactly-once under the
     engine's batch replay — on restart, sink-derived totals differing
     from the intent's prove the crashed batch's append landed, so its
-    replay short-circuits (the nexus_direct.py protocol, sidecar
-    ``_writer_state``)."""
+    replay short-circuits (sidecar ``_writer_state``)."""
 
-    def __init__(
-        self, runs: DataFrame, path: str, on_commit=None,
-        write_intent: bool = True,
-    ):
+    def __init__(self, runs: DataFrame, path: str, on_commit=None):
         self.runs = runs
         self.path = path
-        # write_intent=False drops the per-batch write-ahead intent and
-        # with it the exactly-once-under-replay guarantee (the door
-        # reverts to documented at-least-once with compact_nexus_run as
-        # the dedupe backstop).  Exists for the same-session A/B that
-        # attributes the intent's latency cost (tools/ab_fsm_intent.py);
-        # production keeps the default.
-        self.write_intent = write_intent
         # optional observer: called with the sorted frame_numbers committed
         # by each batch, AFTER the sink write — rides the slim dimension
         # rows the batch collects anyway, so observation adds no Spark
@@ -389,24 +356,19 @@ class NexusStreamWriter:
                 # rare transition batch.
                 # write-ahead intent: (bid, pre-batch totals) before the
                 # append, removed after totals update — see class docstring
-                if self.write_intent:
-                    import json
+                import json
 
-                    os.makedirs(
-                        os.path.dirname(self._intent_file()), exist_ok=True
+                os.makedirs(os.path.dirname(self._intent_file()), exist_ok=True)
+                itmp = self._intent_file() + ".tmp"
+                with open(itmp, "w") as fh:
+                    json.dump(
+                        {
+                            "bid": batch_id,
+                            "totals": {k: list(v) for k, v in totals.items()},
+                        },
+                        fh,
                     )
-                    itmp = self._intent_file() + ".tmp"
-                    with open(itmp, "w") as fh:
-                        json.dump(
-                            {
-                                "bid": batch_id,
-                                "totals": {
-                                    k: list(v) for k, v in totals.items()
-                                },
-                            },
-                            fh,
-                        )
-                    os.replace(itmp, self._intent_file())
+                os.replace(itmp, self._intent_file())
                 if len(per_run) == 1:
                     (run_name,) = per_run
                     dim_local = spark.createDataFrame(dim_vals, _DIM_SCHEMA)

@@ -1,10 +1,9 @@
-"""The fetch-loop door (streaming/nexus_fetchloop.py) must produce the
-SAME sink rows as the direct door for the same dev2 tape — chaining to
-the FSM door and the batch builder through the existing parity tests —
-while committing without a micro-batch: poll + decode + Arrow append in
-one loop thread.  Crash recovery (write-ahead intent + held-back offset
-cursor) is driven crash-at-every-step, the way test_nexus_direct.py
-drives the tick protocol."""
+"""The fetch-loop door (streaming/nexus_fetchloop.py) must assemble the
+SAME frames as the FSM door's update function for the same dev2 tape —
+chaining to the batch builder through test_frame_fsm and the FSM door's
+parity tests — while committing without a micro-batch: poll + decode +
+Arrow append in one loop thread.  Crash recovery (write-ahead intent +
+held-back offset cursor) is driven crash-at-every-step."""
 
 import os
 import time
@@ -93,17 +92,136 @@ def _await(predicate, timeout_s=10.0):
     return predicate()
 
 
-def test_fetchloop_rows_equal_direct_door(spark, tmp_path):
-    """Same complete-frame tape through the fetch loop and the direct
-    door -> identical sink rows (and therefore identical to the FSM
-    door and the batch builder, via test_nexus_direct's chain)."""
+def _fsm_door_frames(chunks, final_ms, frame_ttl_ms=500):
+    """Reference frames: the FSM door's per-key update function
+    (``make_update_fn``, the applyInPandasWithState body) driven per frame
+    key by test_frame_fsm's FakeState.  ``chunks`` is a list of
+    (payloads, now_ms), one per poll; at ``final_ms`` the timeout fires
+    for every key still undispatched.  Within one chunk a key's messages
+    are handed over in the fetch loop's (digitiser, n_events, veto)
+    order: Spark leaves the order inside a group unspecified, and that
+    order picks which of two same-digitiser duplicates in one batch wins.
+    Returns {(ts_us, period, frame, running): (complete, veto, events)}
+    with events the sorted (event_id, event_time_offset, pulse_height)
+    tuples."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from supermusr_data_pipeline_spark.sources.decode import dev2_arrow_batch
+    from supermusr_data_pipeline_spark.streaming.frame_assembly_stream import (
+        make_update_fn,
+    )
+    from tests.test_frame_fsm import FakeState
+
+    fn = make_update_fn(list(range(N_DIG)), frame_ttl_ms=frame_ttl_ms)
+    states: dict[tuple, FakeState] = {}
+    emitted = []
+    for payloads, now_ms in chunks:
+        rb = dev2_arrow_batch(pa.array(payloads, pa.binary()))
+        ts_us = rb.column("ts").cast(pa.int64()).to_pylist()
+        by_key: dict[tuple, list] = {}
+        for t, r in zip(ts_us, rb.to_pylist()):
+            key = (
+                t, r["period_number"], r["protons_per_pulse"], r["running"],
+                r["frame_number"],
+            )
+            by_key.setdefault(key, []).append(r)
+        for key, msgs in by_key.items():
+            msgs.sort(key=lambda r: (
+                r["digitizer_id"], len(r["channel"]), r["veto_flags"],
+            ))
+            st = states.setdefault(key, FakeState())
+            st.now_ms = now_ms
+            emitted += fn(key, iter([pd.DataFrame(msgs)]), st)
+    for key, st in states.items():
+        if st.exists and not st.get[-1]:  # pending, not a tombstone
+            st.now_ms = final_ms
+            st.hasTimedOut = True
+            emitted += fn(key, iter([]), st)
+    out = {}
+    for df in emitted:
+        f = df.iloc[0]
+        key = (
+            int(f["ts"]), int(f["period_number"]), int(f["frame_number"]),
+            bool(f["running"]),
+        )
+        assert key not in out, f"frame {key} emitted twice"
+        out[key] = (
+            bool(f["complete"]),
+            int(f["veto_flags"]),
+            sorted(
+                zip(
+                    map(int, f["channel"]), map(int, f["event_time"]),
+                    map(float, f["event_voltage"]),
+                )
+            ),
+        )
+    return out
+
+
+def _loop_frames(path, from_us=T0_US - 1_000_000):
+    """The loop's sink folded back to frames, in _fsm_door_frames' shape.
+    Also asserts the per-frame columns are constant within a frame, a
+    zero-event frame is exactly one null-event row, frame_seq is
+    contiguous per run, and event_index is the running row count in
+    frame_seq order."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(str(path)):
+        return {}
+    frames: dict[tuple, dict] = {}
+    for r in pq.read_table(str(path)).to_pylist():
+        key = (
+            r["event_time_zero"] // 1000 + from_us, r["period_number"],
+            r["frame_number"], r["running"],
+        )
+        dim = (
+            str(r["run_name"]), r["frame_seq"], r["event_index"],
+            r["frame_complete"], r["veto_flags"],
+        )
+        f = frames.setdefault(key, {"dim": dim, "ev": [], "null_rows": 0})
+        assert f["dim"] == dim, key
+        if r["event_id"] is None:
+            f["null_rows"] += 1
+        else:
+            f["ev"].append(
+                (r["event_id"], r["event_time_offset"], r["pulse_height"])
+            )
+    per_run: dict[str, list] = {}
+    for f in frames.values():
+        assert f["null_rows"] == (0 if f["ev"] else 1)
+        per_run.setdefault(f["dim"][0], []).append(f)
+    for fs in per_run.values():
+        fs.sort(key=lambda f: f["dim"][1])
+        assert [f["dim"][1] for f in fs] == list(range(len(fs)))
+        n = 0
+        for f in fs:
+            assert f["dim"][2] == n
+            n += max(len(f["ev"]), 1)
+    return {
+        k: (f["dim"][3], f["dim"][4], sorted(f["ev"]))
+        for k, f in frames.items()
+    }
+
+
+def test_fetchloop_frames_equal_fsm_door(spark, tmp_path):
+    """Same complete-frame tape through the fetch loop (live broker, two
+    partitions) and the FSM door's update function -> identical frames:
+    key, completeness, veto flags and every event.  The FSM door itself
+    (assemble_frames_stream + NexusStreamWriter) over the same tape
+    writes the identical sink: same columns, same rows, run_name,
+    event_time_zero, frame_seq and event_index included."""
     from pyspark.sql import functions as F
 
     from supermusr_data_pipeline_spark.sources.decode import (
         decode_dev2_messages,
     )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        DirectNexusWriter,
+    from supermusr_data_pipeline_spark.streaming.frame_assembly_stream import (
+        DIGITISER_MESSAGE_SCHEMA,
+        assemble_frames_stream,
+    )
+    from supermusr_data_pipeline_spark.streaming.nexus_stream import (
+        NexusStreamWriter,
     )
 
     payloads = [
@@ -121,29 +239,48 @@ def test_fetchloop_rows_equal_direct_door(spark, tmp_path):
         )
         w.stop()
 
-    # direct door over the same tape (batch path, complete frames)
+    want = _fsm_door_frames([(payloads, 0)], final_ms=0)
+    assert len(want) == 6 and all(c for c, _v, _e in want.values())
+    assert _loop_frames(tmp_path / "loop") == want
+
+    # the FSM door over the same tape (complete frames dispatch in the
+    # one availableNow micro-batch, no TTL wait)
+    spool = str(tmp_path / "spool")
+    decode_dev2_messages(
+        spark.createDataFrame([(p,) for p in payloads], "value binary")
+    ).coalesce(1).write.parquet(spool)
     runs_df = spark.createDataFrame(
         [("run_a", T0_US - 1_000_000, None)],
         "run_name string, from_us long, until_us long",
     ).select(
         "run_name",
         F.timestamp_micros("from_us").alias("collect_from"),
-        F.timestamp_micros(F.col("until_us")).alias("collect_until"),
+        F.timestamp_micros("until_us").alias("collect_until"),
     )
-    env = spark.createDataFrame(
-        [(p,) for p in payloads], "value binary"
-    ).select("value")
-    msgs = decode_dev2_messages(env)
-    direct = DirectNexusWriter(
-        runs_df, str(tmp_path / "direct"), list(range(N_DIG)),
-        frame_ttl_ms=200,
+    frames = assemble_frames_stream(
+        spark.readStream.schema(DIGITISER_MESSAGE_SCHEMA).parquet(spool),
+        list(range(N_DIG)), frame_ttl_ms=200,
     )
-    direct(msgs, 0)
+    fsm_sink = str(tmp_path / "fsm_sink")
+    q = (
+        frames.writeStream.foreachBatch(NexusStreamWriter(runs_df, fsm_sink))
+        .option("checkpointLocation", str(tmp_path / "fsm_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    def types(p):
+        return sorted(
+            (f.name, f.dataType.simpleString())
+            for f in spark.read.parquet(str(p)).schema.fields
+        )
 
-    got, cols_a = _sink_rows(spark, tmp_path / "loop")
-    want, cols_b = _sink_rows(spark, tmp_path / "direct")
-    assert cols_a == cols_b
-    assert got == want
+    loop_rows, loop_cols = _sink_rows(spark, tmp_path / "loop")
+    fsm_rows, fsm_cols = _sink_rows(spark, fsm_sink)
+    assert loop_cols == fsm_cols
+    assert types(tmp_path / "loop") == types(fsm_sink)
+    assert loop_rows == fsm_rows
+    assert len(loop_rows) == sum(3 + d for d in range(N_DIG)) * 6
 
 
 def test_fetchloop_ttl_dispatches_incomplete_and_tombstones(spark, tmp_path):
@@ -817,34 +954,17 @@ def test_fetchloop_survives_cluster_leader_failover(spark, tmp_path):
     ) == list(range(8))
 
 
-def test_fetchloop_fsm_property_matches_direct_door(spark, tmp_path):
+def test_fetchloop_fsm_property_matches_fsm_door(tmp_path):
     """Property: over random tapes (missing digitisers, duplicates,
-    zero-event frames, arbitrary chunking into polls/batches, TTL
-    expiries on a FAKE clock) the fetch-loop FSM writes the same sink
-    rows as the direct door fed the same chunks — the numpy/Arrow FSM
-    reimplementation cannot diverge from the proven one on orderings
-    the example generator finds."""
+    zero-event frames, arbitrary chunking into polls, TTL expiries on a
+    FAKE clock) the fetch-loop FSM assembles the same frames as the FSM
+    door's update function fed the same chunks — the numpy/Arrow FSM
+    cannot diverge from the GroupState one on orderings the example
+    generator finds."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
-    from supermusr_data_pipeline_spark.sources.decode import (
-        decode_dev2_messages,
-    )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        DirectNexusWriter,
-    )
-
-    from pyspark.sql import functions as F
-
-    runs_df = spark.createDataFrame(
-        [("run_a", T0_US - 1_000_000, None)],
-        "run_name string, from_us long, until_us long",
-    ).select(
-        "run_name",
-        F.timestamp_micros("from_us").alias("collect_from"),
-        F.timestamp_micros(F.col("until_us")).alias("collect_until"),
-    )
 
     case_idx = [0]
 
@@ -866,8 +986,8 @@ def test_fetchloop_fsm_property_matches_direct_door(spark, tmp_path):
                 msgs.append(
                     _payload(d, f, n_ev, veto=veto, ev_offset=10 * j)
                 )
-        # one chunking shared by both doors (chunk boundary = poll /
-        # micro-batch boundary)
+        # one chunking shared by the loop and the reference update
+        # function (chunk boundary = poll boundary = one update call)
         cuts = data.draw(
             st.lists(st.integers(1, max(1, len(msgs))), max_size=3),
             label="cuts",
@@ -886,11 +1006,8 @@ def test_fetchloop_fsm_property_matches_direct_door(spark, tmp_path):
             bootstrap="unused:0", topics=["t"],
             frame_ttl_ms=500, clock=lambda: now[0],
         )
-        direct = DirectNexusWriter(
-            runs_df, str(base / "direct"), list(range(N_DIG)),
-            frame_ttl_ms=500, clock=lambda: now[0],
-        )
         off = [0]
+        timed = []
 
         def recs(chunk):
             out = [
@@ -900,32 +1017,157 @@ def test_fetchloop_fsm_property_matches_direct_door(spark, tmp_path):
             off[0] += len(chunk)
             return out
 
-        for bid, chunk in enumerate(chunks):
+        for chunk in chunks:
             w.poll_once(records=recs(chunk))
-            env = spark.createDataFrame(
-                [(p,) for p in chunk], "value binary"
-            )
-            direct(decode_dev2_messages(env), bid)
+            timed.append((chunk, int(now[0] * 1000)))
             now[0] += 0.05
-        # expire any pending incomplete frames on both doors
+        # expire any pending incomplete frames: an empty poll for the
+        # loop, the timeout call for the reference
         now[0] += 1.0
         w.poll_once(records=[])
-        direct._spark = spark
-        direct.expire_pending()
 
-        a = _count_or_empty(spark, base / "loop")
-        b = _count_or_empty(spark, base / "direct")
-        assert a == b
-
-    def _count_or_empty(spark_, path):
-        import os as _os
-
-        if not _os.path.isdir(str(path)):
-            return []
-        rows, _cols = _sink_rows(spark_, path)
-        return rows
+        want = _fsm_door_frames(timed, final_ms=int(now[0] * 1000))
+        assert _loop_frames(base / "loop") == want
 
     _case()
+
+
+def test_fetchloop_retirement_drops_run_from_live_writer(spark, tmp_path):
+    """After retire_completed_runs(writer=...), a straggler frame for the
+    retired run no longer matches its interval — the run's live
+    directory is not resurrected next to its completed/ copy."""
+    from pyspark.sql import functions as F
+
+    from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
+    from supermusr_data_pipeline_spark.operators.nexus_sink import (
+        retire_completed_runs,
+    )
+
+    until = T0_US + 100_000  # run stops 100 ms after T0
+    runs = spark.createDataFrame(
+        [("run_a", T0_US - 1_000_000, until)],
+        "run_name string, from_us long, until_us long",
+    ).select(
+        "run_name",
+        F.timestamp_micros("from_us").alias("collect_from"),
+        F.timestamp_micros("until_us").alias("collect_until"),
+    )
+    sink = str(tmp_path / "sink")
+    w = FetchLoopNexusWriter(
+        runs=runs, path=sink, expected_digitizers=list(range(N_DIG)),
+        bootstrap="unused:0", topics=["t"],
+    )
+
+    def recs(frame, first_offset):
+        return [
+            ConsumerRecord("t", 0, first_offset + d, 0, b"k",
+                           _payload(d, frame, 2))
+            for d in range(N_DIG)
+        ]
+
+    w.poll_once(records=recs(0, 0))
+    assert os.path.isdir(os.path.join(sink, "run_name=run_a"))
+
+    moved = retire_completed_runs(
+        spark, sink, runs, now="2030-01-01 00:00:00", compact=True, writer=w
+    )
+    assert moved == ["run_a"]
+    assert not os.path.exists(os.path.join(sink, "run_name=run_a"))
+
+    # straggler inside the retired run's interval: frame 2 at T0+40ms
+    w.poll_once(records=recs(2, N_DIG))
+    assert not os.path.exists(os.path.join(sink, "run_name=run_a"))
+    completed = os.path.join(sink, "completed", "run_name=run_a")
+    assert spark.read.parquet(completed).count() == 2 * N_DIG
+
+
+def test_fetchloop_retirement_fences_straggler_on_live_loop(
+    spark, tmp_path, monkeypatch
+):
+    """Threaded: the loop keeps polling on its own thread while
+    retire_completed_runs moves and compacts the run.  A straggler that
+    arrives mid-retirement (during the compaction job) no longer matches
+    the retired run, so its live directory is not recreated."""
+    import queue
+
+    from pyspark.sql import functions as F
+
+    from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
+    from supermusr_data_pipeline_spark.operators.nexus_sink import (
+        retire_completed_runs,
+    )
+    from supermusr_data_pipeline_spark.plans import index_maintenance
+
+    runs = spark.createDataFrame(
+        [("run_a", T0_US - 1_000_000, T0_US + 100_000)],
+        "run_name string, from_us long, until_us long",
+    ).select(
+        "run_name",
+        F.timestamp_micros("from_us").alias("collect_from"),
+        F.timestamp_micros("until_us").alias("collect_until"),
+    )
+    feed: queue.Queue = queue.Queue()
+
+    class _Feed:
+        def seek(self, offsets):
+            pass
+
+        def poll(self, max_wait_ms):
+            try:
+                return feed.get(timeout=max_wait_ms / 1000)
+            except queue.Empty:
+                return []
+
+        def close(self):
+            pass
+
+    def recs(frame, first_offset):
+        return [
+            ConsumerRecord("t", 0, first_offset + d, 0, b"k",
+                           _payload(d, frame, 2))
+            for d in range(N_DIG)
+        ]
+
+    def records_seen():
+        return sum(c["n_records"] for c in list(w.poll_log))
+
+    sink = str(tmp_path / "sink")
+    w = FetchLoopNexusWriter(
+        runs=runs, path=sink, expected_digitizers=list(range(N_DIG)),
+        bootstrap="unused:0", topics=["t"], poll_ms=10,
+        consumer_factory=_Feed,
+    )
+    w.start()
+    try:
+        feed.put(recs(0, 0))
+        assert _await(lambda: w._totals.get("run_a", (0, 0))[0] == 1)
+        assert os.path.isdir(os.path.join(sink, "run_name=run_a"))
+
+        real_compact = index_maintenance.compact_nexus_run
+        straggler_seen = []
+
+        def compact_with_straggler(*a, **kw):
+            # the run dir has moved; a straggler inside its interval
+            # (frame 2 at T0+40ms) reaches the live loop now
+            feed.put(recs(2, N_DIG))
+            straggler_seen.append(
+                _await(lambda: records_seen() == 2 * N_DIG)
+            )
+            return real_compact(*a, **kw)
+
+        monkeypatch.setattr(
+            index_maintenance, "compact_nexus_run", compact_with_straggler
+        )
+        moved = retire_completed_runs(
+            spark, sink, runs, now="2030-01-01 00:00:00", compact=True,
+            writer=w,
+        )
+    finally:
+        w.stop()
+    assert moved == ["run_a"] and straggler_seen == [True]
+    assert not os.path.exists(os.path.join(sink, "run_name=run_a"))
+    completed = os.path.join(sink, "completed", "run_name=run_a")
+    assert spark.read.parquet(completed).count() == 2 * N_DIG
 
 
 def test_fetchloop_aev2_mode_matches_dev2_mode(spark, tmp_path):

@@ -3,7 +3,7 @@ foreachBatch nexus sink, DAQ stats — driven through real Structured
 Streaming queries over file sources (the test analog of the Kafka topics)."""
 
 import time
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from supermusr_data_pipeline_spark.operators.frame_assembly import assemble_frames
 from supermusr_data_pipeline_spark.streaming import (
@@ -14,6 +14,7 @@ from supermusr_data_pipeline_spark.streaming import (
     runs_from_control,
     write_nexus_stream,
 )
+from supermusr_data_pipeline_spark.streaming.nexus_stream import NexusStreamWriter
 from supermusr_data_pipeline_spark.streaming.run_lifecycle import CONTROL_SCHEMA
 
 import pytest
@@ -541,3 +542,84 @@ def test_dispatch_order_resequencable_within_batch(spark, tmp_path):
     # ts tracks frame_number, so either sort key alone recovers the sequence
     assert [r.ts for r in reseq] == sorted(r.ts for r in rows)
     assert all(r.complete for r in rows)
+
+
+# ---- the write-ahead intent protocol of the FSM door's writer ----
+
+T0_US = int(datetime(2024, 3, 1, 12, 0, 0, tzinfo=timezone.utc).timestamp() * 1_000_000)
+
+
+def _runs(spark, name="run_a", from_us=None, until_us=None):
+    from pyspark.sql import functions as F
+
+    rows = [(name, from_us or (T0_US - 1_000_000), until_us)]
+    return spark.createDataFrame(
+        rows, "run_name string, from_us long, until_us long"
+    ).select(
+        "run_name",
+        F.timestamp_micros("from_us").alias("collect_from"),
+        F.timestamp_micros(F.col("until_us")).alias("collect_until"),
+    )
+
+
+def _frame_row(frame, n_events, veto=0):
+    ts = datetime.fromtimestamp((T0_US + frame * 20_000) / 1e6, tz=timezone.utc)
+    return (
+        ts, frame // 1000, 4, True, frame, veto, True, [0, 1],
+        [e % 8 for e in range(n_events)],
+        [100 * frame + 10 * e for e in range(n_events)],
+        [float(e) for e in range(n_events)],
+    )
+
+
+def _frames(spark, rows):
+    from supermusr_data_pipeline_spark.schemas import FRAME_EVENT_LIST_SCHEMA
+
+    return spark.createDataFrame(rows, FRAME_EVENT_LIST_SCHEMA)
+
+
+def test_fsm_writer_intent_recovers_committed_append(spark, tmp_path):
+    """NexusStreamWriter: a crash between the append and the engine's
+    commit leaves the intent on disk; the restarted writer detects the
+    committed append via totals and short-circuits the replay."""
+    sink = str(tmp_path / "sink")
+    runs = _runs(spark)
+    w = NexusStreamWriter(runs, sink)
+    w(_frames(spark, [_frame_row(0, 2)]), 0)
+    b1 = _frames(spark, [_frame_row(1, 3)])
+    w(b1, 1)  # intent for bid 1 stays on disk (never removed)
+    n = spark.read.parquet(sink).count()
+
+    w2 = NexusStreamWriter(runs, sink)  # crash-restart
+    w2(b1, 1)  # engine replays batch 1
+    assert spark.read.parquet(sink).count() == n
+    w2(_frames(spark, [_frame_row(2, 2)]), 2)
+    f2 = spark.read.parquet(sink).filter("frame_number = 2").collect()
+    assert {r.frame_seq for r in f2} == {2}
+    assert {r.event_index for r in f2} == {5}
+
+
+def test_fsm_writer_intent_replays_uncommitted_append(spark, tmp_path):
+    """NexusStreamWriter: intent written but the append never landed —
+    the replay redoes the batch exactly once."""
+    import json as _json
+    import os
+
+    sink = str(tmp_path / "sink")
+    runs = _runs(spark)
+    w = NexusStreamWriter(runs, sink)
+    w(_frames(spark, [_frame_row(0, 2)]), 0)
+    totals_b0 = dict(w._totals)
+    os.makedirs(os.path.join(sink, "_writer_state"), exist_ok=True)
+    with open(os.path.join(sink, "_writer_state", "intent.json"), "w") as fh:
+        _json.dump(
+            {"bid": 1, "totals": {k: list(v) for k, v in totals_b0.items()}}, fh
+        )
+
+    w2 = NexusStreamWriter(runs, sink)
+    w2(_frames(spark, [_frame_row(1, 3)]), 1)
+    out = spark.read.parquet(sink)
+    f1 = out.filter("frame_number = 1").collect()
+    assert len(f1) == 3
+    assert {r.frame_seq for r in f1} == {1}
+    assert {r.event_index for r in f1} == {2}
